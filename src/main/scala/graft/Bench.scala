@@ -174,14 +174,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.installCacheBackstop(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // noop sink: forces full query execution (unlike count(), which lets
     // Catalyst prune aggregations) without measuring disk-write time.
     // Untimed warmup: the first query otherwise absorbs ~10s of one-time
@@ -258,13 +252,7 @@ object Bench {
       // memory/GC pressure. The deliberately-shared Domain.silverFlat
       // frame is NOT released (p02/p03/p04 sharing one scan is the
       // engine's design).
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Sampling.releaseCaches()
-      graft.operators.Quality.releaseCaches()
-      graft.operators.Unigram.releaseCaches()
-      graft.operators.WordPiece.releaseCaches()
-      graft.operators.Graph.releaseCaches()
-      graft.queries.Text.releaseCaches()
+      graft.util.CacheRegistry.releaseAll()
       Run(elapsed, ok, withProbe, counts.keySet, gcSec, heapMb)
     }
     val allRuns = scala.collection.mutable.Map.empty[String, Seq[Run]]

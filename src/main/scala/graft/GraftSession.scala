@@ -7,8 +7,11 @@ import org.apache.spark.sql.SparkSession
   * `master`).
   */
 object GraftSession {
-  /** Configs that must be present on any session running this engine. */
+  /** Configs that must be present on any session running this engine,
+    * and the engine's `graft_*` SQL functions, injected into every
+    * session the builder makes (`newSession()` children included). */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
+    .withExtensions(graft.functions.GraftExpressions.inject)
     .config("spark.sql.session.timeZone", "UTC")
     // events.parquet stores TIMESTAMP(NANOS); Spark has no nanos type, so
     // read as long and convert (Corpus.events truncates to micros, matching
@@ -60,14 +63,15 @@ object GraftSession {
 
   /** Session-close backstop for the engine's memoized/persisted frames
     * (ADVICE r14): a long-lived driver that never calls
-    * `Domain.clearCache` itself would otherwise keep the operator cache
-    * registries (e.g. triangleCounts' DISK_ONLY edge persist) and the
-    * memoization maps pinned for the JVM lifetime after the session
-    * stops. Frames that can no longer be unpersisted post-stop are
-    * skipped by the release hooks; the maps still drop their session
-    * keys. Sessions built directly from [[configure]] should call this
-    * once after `getOrCreate()` (or call `Domain.clearCache` on their
-    * own schedule). */
+    * `Domain.clearCache` itself would otherwise keep every operator
+    * [[graft.util.CacheRegistry]] (e.g. triangleCounts' DISK_ONLY edge
+    * persist) and the memoization maps pinned for the JVM lifetime after
+    * the session stops. At application end this calls
+    * `Domain.clearCache`, which releases them all through
+    * `CacheRegistry.releaseAll`; frames that can no longer be unpersisted
+    * post-stop are skipped, and the maps still drop their session keys.
+    * [[local]] installs it; sessions built directly from [[configure]]
+    * should call this once after `getOrCreate()`. */
   def installCacheBackstop(spark: SparkSession): Unit =
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onApplicationEnd(

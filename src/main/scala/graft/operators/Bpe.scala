@@ -40,7 +40,6 @@ object Bpe {
     * (word, n, syms) where syms = characters with `</w>` appended to the
     * last. The single corpus-sized step. */
   def wordTable(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    GraftExpressions.register(docs.sparkSession)
     docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
@@ -71,7 +70,6 @@ object Bpe {
   def learnMerges(docs: DataFrame, nMerges: Int,
       textCol: String = "text"): Seq[Merge] = {
     require(nMerges > 0, s"nMerges must be positive, got $nMerges")
-    GraftExpressions.register(docs.sparkSession)
     // localCheckpoint each generation (the dupClusters lesson,
     // Dedup.scala): persist() caches data but leaves the LOGICAL plan
     // growing by one fold expression per merge, and analysis/optimization
@@ -123,7 +121,6 @@ object Bpe {
     * finding of VERDICT r9). Adds `bpe_units` (array<string>). */
   def applyMergesTo(docs: DataFrame, merges: Seq[Merge],
       textCol: String = "text"): DataFrame = {
-    GraftExpressions.register(docs.sparkSession)
     docs.withColumn("bpe_units",
       flatten(transform(TextFunctions.tokens(col(textCol)),
         w => segmentWord(w, merges))))
@@ -131,8 +128,7 @@ object Bpe {
 
   /** The per-word segmentation: initial code-point symbols (with the
     * `</w>` marker), then every merge applied in rank order — all inside
-    * one expression call. The caller must have registered
-    * [[graft.functions.GraftExpressions]] on the active session. */
+    * one expression call. */
   private def segmentWord(w: Column, merges: Seq[Merge]): Column =
     call_function("graft_bpe_apply", w,
       lit(GraftExpressions.encodeMerges(merges.map(m => (m.left, m.right)))))

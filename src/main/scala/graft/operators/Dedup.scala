@@ -30,10 +30,6 @@ object Dedup {
   private val caches = new graft.util.CacheRegistry
   private def tracked(df: DataFrame): DataFrame = caches.track(df)
 
-
-  /** Unpersists every cache created by the near-dup operators. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** One row per doc_id with a DETERMINISTIC text pick (min). Replaces
     * `dropDuplicates("doc_id")` in the index write/probe paths:
     * dropDuplicates keeps an arbitrary row, so when a persisted frame is
@@ -63,7 +59,6 @@ object Dedup {
     * exact-Jaccard verdict — and therefore every family oracle — is
     * unchanged by construction. */
   def withShingles(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.GraftExpressions.register(docs.sparkSession)
     docs
       .withColumn("toks", tokens(col("text")))
       .withColumn("shingles", call_function("graft_shingles", col("text"), lit(n)))
@@ -108,7 +103,6 @@ object Dedup {
     * (same trade the published pipelines make by matching on hashes). */
   def ngramContamination(train: DataFrame, eval: DataFrame, n: Int): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
-    graft.functions.GraftExpressions.register(train.sparkSession)
     // gram construction runs as the codegen'd graft_ngrams (r17 — the
     // graft_shingles lesson; the interpreted transform/slice/concat_ws
     // chain was the scan-stage cost here too). Docs under n tokens
@@ -154,7 +148,6 @@ object Dedup {
   def bloomContamination(train: DataFrame, eval: DataFrame, n: Int,
       numHashes: Int = 2, numBits: Int = 1 << 20): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
-    graft.functions.GraftExpressions.register(train.sparkSession)
     val spark = train.sparkSession
     import spark.implicits._
     def grams(docs: DataFrame) = docs
@@ -814,7 +807,7 @@ object Dedup {
     // cacheIntermediates=false for callers that probe repeatedly in one
     // JVM (a streaming micro-batch sink): the batch-side explode is cheap
     // to recompute and per-epoch persists would accumulate in the
-    // registry until releaseCaches
+    // registry until CacheRegistry.releaseAll
     // uniqueById: an at-least-once source can replay a record INTO
     // one batch (same doc_id twice); per-doc shingles are unique by
     // construction, but a duplicated probe row would double every
@@ -1150,7 +1143,6 @@ object Dedup {
       minContainment: Double = 0.9): DataFrame = {
     require(minContainment > 0 && minContainment <= 1,
       s"minContainment must sit in (0,1], got $minContainment")
-    graft.functions.GraftExpressions.register(docs.sparkSession)
     // shingles reduce to 8-byte xxhash64 keys BEFORE any shuffle (the
     // t48/t23 discipline): the strings never reach the output, the df
     // filter, candidate join, and verify all work on the hash, and the
@@ -1375,7 +1367,6 @@ object Dedup {
     require(maxDf >= 2, s"maxDf must be at least 2, got $maxDf")
     require(minSim > 0.0 && minSim <= 1.0, s"minSim must be in (0, 1], got $minSim")
     // persisted: feeds the df aggregation and both self-join sides
-    graft.functions.GraftExpressions.register(docs.sparkSession)
     // codegen'd distinct grams (graft_shingles = sorted-distinct
     // variant; every consumer below is set-based, so the order change
     // vs array_distinct(ngramsAll(...)) is immaterial)
@@ -1440,7 +1431,6 @@ object Dedup {
     * paper; original inter-token whitespace is not preserved). */
   def exciseRepeatedSpans(docs: DataFrame, spanTokens: Int = 8): DataFrame = {
     require(spanTokens > 1, s"spanTokens must exceed 1, got $spanTokens")
-    graft.functions.GraftExpressions.register(docs.sparkSession)
     val base = docs
       .select(col("doc_id"), col("text"), tokens(col("text")).as("_sp"))
       .filter(size(col("_sp")) > 0)

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftExpressions
 import graft.functions.TextFunctions.tokens
 
 /** Exact heavy hitters through a bounded sketch — the frequent-items
@@ -38,7 +37,6 @@ object Frequency {
     * order. */
   def heavyHitters(docs: DataFrame, k: Int, textCol: String = "text"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    GraftExpressions.register(docs.sparkSession)
     val toks = docs.select(explode(tokens(col(textCol))).as("token"))
     val row = toks
       .agg(count(lit(1)).as("n"), expr(s"graft_mg_sketch(token, $k)").as("cand"))
@@ -77,7 +75,6 @@ object Frequency {
       textCol: String = "text"): DataFrame = {
     require(depth > 0, s"depth must be positive, got $depth")
     require(width > 1, s"width must exceed 1, got $width")
-    GraftExpressions.register(docs.sparkSession)
     val spark = docs.sparkSession
     import spark.implicits._
     val toks = docs.select(explode(tokens(col(textCol))).as("token"))
@@ -133,7 +130,6 @@ object Frequency {
     require(depth > 0, s"depth must be positive, got $depth")
     require(width > 1, s"width must exceed 1, got $width")
     val spark = a.sparkSession
-    GraftExpressions.register(spark)
     import spark.implicits._
     // ONE raw scan per side: the exact per-key frequency frame (needed
     // below for the ground truth anyway) is materialized eagerly
@@ -222,7 +218,6 @@ object Frequency {
     * order. */
   def hllDistinct(df: DataFrame, itemCol: org.apache.spark.sql.Column,
       groupCol: String, p: Int = 8): DataFrame = {
-    GraftExpressions.register(df.sparkSession)
     val grouped = df
       .select(col(groupCol), itemCol.as("_it"))
       .groupBy(col(groupCol))

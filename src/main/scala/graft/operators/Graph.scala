@@ -9,13 +9,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Graph {
 
+  // The edge-sized persists registered by [[triangleCounts]], freed by
+  // CacheRegistry.releaseAll. Callers must materialize the returned frame
+  // before releasing (Verify/Bench always do).
   private val caches = new graft.util.CacheRegistry
-
-  /** Releases the edge-sized persists registered by [[triangleCounts]]
-    * — wired into the Bench per-query cleanup and
-    * [[graft.queries.Domain.clearCache]]. Callers must materialize the
-    * returned frame before releasing (Verify/Bench always do). */
-  def releaseCaches(): Unit = caches.releaseAll()
 
   /** PageRank (Brin & Page 1998) over a directed edge list, a FIXED
     * number of power iterations from the uniform start:
@@ -186,8 +183,8 @@ object Graph {
       .select(col("src").as("x"), col("v"), col("w"))
     val tri = wedges.join(
       oriented.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
-    // oriented is RELEASED through the registry (releaseCaches, wired
-    // into the Bench per-query cleanup and Domain.clearCache), not by an
+    // oriented is RELEASED through the registry (CacheRegistry.releaseAll,
+    // from the Bench per-query cleanup and Domain.clearCache), not by an
     // eager cut here: the first ADVICE-leak fix localCheckpoint'd the
     // counts inside the query so oriented could unpersist before
     // returning — an eager materialization the caller never asked for,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -36,9 +36,6 @@ object Quality {
 
   private val caches = new graft.util.CacheRegistry
   private def tracked(df: DataFrame): DataFrame = caches.track(df)
-
-  /** Unpersists every cache created by the quality operators. */
-  def releaseCaches(): Unit = caches.releaseAll()
 
   /** Whitespace unigrams ++ adjacent bigrams of a token-array column —
     * the hashed n-gram feature set of DSIR/CCNet-style bucket LMs (the
@@ -98,7 +95,6 @@ object Quality {
       seed: String): DataFrame = {
     require(buckets > 1, s"buckets must be > 1, got $buckets")
     require(sampleK > 0, s"sampleK must be positive, got $sampleK")
-    graft.functions.GraftExpressions.register(SparkSession.active)
     val g = hashedGrams(docs, textCol, idCol,
       Seq("lang" -> col(langCol), "is_target" -> isTarget), buckets)
     val tc = g.filter(col("is_target"))
@@ -387,7 +383,6 @@ object Quality {
     // was the scan-stage cost). Bit-identical; under-2-token docs yield
     // an empty array, which explode drops — the same rows the old
     // size(sp) >= 2 filter removed.
-    graft.functions.GraftExpressions.register(docs.sparkSession)
     val bg = docs
       .select(col(groupCol),
         explode(call_function("graft_bigram_pairs", textCol)).as("b"))
@@ -532,8 +527,8 @@ object Quality {
     * patterns in ONE automaton pass (O(|text| + matches),
     * dictionary-suffix links materialized at build, raw-UTF-8-byte fast
     * path), inside whole-stage codegen. Zero shuffles: one scan, one
-    * projection, the output sort. MEASURED crossover (tools/BlocklistAB,
-    * 500k docs, min-of-3): at P = 8 a short-circuiting contains-OR
+    * projection, the output sort. MEASURED crossover (r14 A/B, 500k
+    * docs, min-of-3): at P = 8 a short-circuiting contains-OR
     * FILTER is still faster (1.24 s vs 1.47 s — it exits on the first
     * hit and computes no counts/positions, the automaton always
     * finishes the text to count every pattern); at P = 64 the automaton
@@ -547,7 +542,6 @@ object Quality {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(patterns.forall(p => !p.contains('\t')),
       "patterns must not contain tabs (the literal wire format)")
-    graft.functions.GraftExpressions.register(docs.sparkSession)
     val pats = patterns.mkString("\t").replace("'", "\\'")
     docs
       .withColumn("_b", expr(s"graft_blocklist($textCol, '$pats')"))
@@ -751,7 +745,6 @@ object Quality {
     // interpreted transform/struct chain; under-2-token docs yield an
     // empty array, which explode drops — the same rows the old
     // size(sp) >= 2 filter removed.
-    graft.functions.GraftExpressions.register(train.sparkSession)
     def bigrams(docs: DataFrame, extra: Seq[Column]): DataFrame = docs
       .select(extra :+ col(groupCol) :+
         explode(call_function("graft_bigram_pairs", textCol)).as("b"): _*)

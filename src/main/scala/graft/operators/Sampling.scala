@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic, engine-portable dataset splitting for training pipelines.
@@ -25,14 +25,7 @@ object Sampling {
     * mod 2³¹−1 over its code points. Range [0, 2³¹−1). Takes a Column —
     * never a SQL fragment — so caller-supplied values (seeds, composite
     * keys) stay DATA: there is no string to break out of. */
-  def portableFingerprint(c: Column): Column = {
-    // call_function resolves against the session's function registry at
-    // analysis time, so make sure graft_fold31 is registered on the
-    // active session before the Column is used (idempotent,
-    // registry-local).
-    graft.functions.GraftExpressions.register(SparkSession.active)
-    call_function("graft_fold31", c)
-  }
+  def portableFingerprint(c: Column): Column = call_function("graft_fold31", c)
 
   /** Column-name convenience overload. */
   def portableFingerprint(name: String): Column = portableFingerprint(col(name))
@@ -249,13 +242,9 @@ object Sampling {
   }
 
   // Frames shared by several aggregation branches of dsirResample persist
-  // here; Bench releases them between queries (same lifecycle as the
-  // Dedup/Text registries).
+  // here; Bench releases them between queries (CacheRegistry.releaseAll).
   private val caches = new graft.util.CacheRegistry
   private def tracked(df: DataFrame): DataFrame = caches.track(df)
-
-  /** Unpersists every cache created by the sampling operators. */
-  def releaseCaches(): Unit = caches.releaseAll()
 
   /** Deterministic K-sample per stratum — the "carve a fixed eval/debug
     * set per domain" operation: the `k` rows of each stratum whose keys
@@ -275,7 +264,6 @@ object Sampling {
   def stratifiedSample(df: DataFrame, keyCol: String, stratumCol: String,
       idCol: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    graft.functions.GraftExpressions.register(SparkSession.active)
     // TopK keeps the k best by (score desc, id asc); negating the
     // fingerprint turns that into (fp asc, id asc)
     df.withColumn("_fp", portableFingerprint(keyCol))
@@ -477,7 +465,6 @@ object Sampling {
   def weightedReservoir(df: DataFrame, idCol: String, weightCol: Column,
       k: Int, seed: String): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    graft.functions.GraftExpressions.register(df.sparkSession)
     val u = (portableUniformFingerprint(
         concat(lit(seed + ":"), col(idCol).cast("string"))) + lit(1))
       .cast("double") / lit(2147483647.0)
@@ -532,8 +519,6 @@ object Sampling {
     require(k > 0, s"k must be positive, got $k")
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must lie in (0, 1], got $qs")
-    val spark = df.sparkSession
-    graft.functions.GraftExpressions.register(spark)
     // NULL rows are skipped, matching the sketch family's update contract
     // — and Spark sorts nulls FIRST where DuckDB sorts them LAST, so a
     // null value in the (value, id) order would silently desync the gate

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.GraftExpressions
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -76,7 +75,7 @@ object Similarity {
     * while at deployment sizes the crossJoin's |corpus|·Q materialized
     * pair rows are dimension-independent overhead that dominates the
     * flops: 3.2–4.3 s vs 1.3 s at 128k × 512 dims × 100 queries
-    * (tools/WideEmb, SURVEY §8.-9). */
+    * (r15 wide-embedding A/B, SURVEY §8.-9). */
   private[graft] val FusedKernelMinBytes: Long = 64L << 20
 
   private def estimatedBytes(df: DataFrame): BigInt =
@@ -89,7 +88,6 @@ object Similarity {
 
   private[graft] def cosineTopKForQueriesImpl(spark: SparkSession, emb: DataFrame,
       queryPred: Column, k: Int, fused: Boolean): DataFrame = {
-    GraftExpressions.register(spark)
     // ONE canonical evaluation point for queryPred in BOTH branches:
     // the RAW emb frame, full schema (metadata predicates like
     // `col("is_query")` keep working). The branches used to differ
@@ -176,17 +174,16 @@ object Similarity {
     * (sorting such vectors last, mirrored in the oracle) so 0/0 never
     * reaches the ranking. Output: (query_id, rank, neighbor_id,
     * cos_sim — the FULL-width exact cosine), rank 1..k. */
-  def matryoshkaTopK(spark: SparkSession, emb: DataFrame, nQueries: Int,
+  def matryoshkaTopK(emb: DataFrame, nQueries: Int,
       k: Int, prefixDims: Int, overfetch: Int = 4): DataFrame =
-    matryoshkaTopKImpl(spark, emb, nQueries, k, prefixDims, overfetch,
+    matryoshkaTopKImpl(emb, nQueries, k, prefixDims, overfetch,
       fused = estimatedBytes(emb) >= FusedKernelMinBytes)
 
-  private[graft] def matryoshkaTopKImpl(spark: SparkSession, emb: DataFrame,
+  private[graft] def matryoshkaTopKImpl(emb: DataFrame,
       nQueries: Int, k: Int, prefixDims: Int, overfetch: Int,
       fused: Boolean): DataFrame = {
     require(prefixDims >= 1, s"prefixDims must be positive, got $prefixDims")
     require(overfetch >= 1, s"overfetch must be >= 1, got $overfetch")
-    GraftExpressions.register(spark)
     val q = normed(emb.filter(col("vec_id") < nQueries))
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
@@ -196,7 +193,7 @@ object Similarity {
     // from normed()'s full-width double `v`, and CollapseProject
     // re-inlined the d-wide cast into every per-query dot under the
     // crossJoin, making the "prefix" pass 3× slower than exact at
-    // d=512: tools/WideEmb). Above [[FusedKernelMinBytes]] the pass
+    // d=512, measured in r15). Above [[FusedKernelMinBytes]] the pass
     // runs through the fused multi-query kernel (no |corpus|·Q pair
     // rows at all); below it, the single-job crossJoin form — both
     // branches bit-identical, zeroScore -1.0 preserving the documented
@@ -273,10 +270,9 @@ object Similarity {
     * ties toward the smaller id, so the unrolled-greedy SQL oracle
     * replays every pick. Output: (query_id, rank 1..k, neighbor_id,
     * mmr_score, cos_sim — the exact query cosine). */
-  def mmrTopK(spark: SparkSession, emb: DataFrame, nQueries: Int, k: Int,
+  def mmrTopK(emb: DataFrame, nQueries: Int, k: Int,
       poolC: Int, lambda: Double): DataFrame = {
     require(poolC >= k, s"candidate pool $poolC must be >= k $k")
-    GraftExpressions.register(spark)
     val n = normed(emb)
     val q = n.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
@@ -322,9 +318,8 @@ object Similarity {
     * closes and no bucketing scheme stays sub-quadratic at recall 1
     * (the threshold sinks under the inter-pair noise floor); that
     * regime is [[nearDupPairsExact]]'s. */
-  def nearDupPairs(spark: SparkSession, emb: DataFrame, threshold: Double,
+  def nearDupPairs(emb: DataFrame, threshold: Double,
       numPlanes: Int = 128, bandBits: Int = 8): DataFrame = {
-    GraftExpressions.register(spark)
     val n = normed(emb)
     val sigs = n.select(col("vec_id"),
         posexplode(bandValues(numPlanes, bandBits)).as(Seq("band", "band_val")))
@@ -347,8 +342,7 @@ object Similarity {
     * answer when the threshold sits below the corpus noise floor
     * (sub-noise all-pairs similarity admits no sub-quadratic exact
     * algorithm — every pair must be examined). */
-  def nearDupPairsExact(spark: SparkSession, emb: DataFrame, threshold: Double): DataFrame = {
-    GraftExpressions.register(spark)
+  def nearDupPairsExact(emb: DataFrame, threshold: Double): DataFrame = {
     val n = normed(emb)
     n.as("x").join(n.as("y"), col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
@@ -385,7 +379,6 @@ object Similarity {
     * ascending vec_id. */
   def semDedup(spark: SparkSession, emb: DataFrame, k: Int, threshold: Double,
       refineIterations: Int = 2): DataFrame = {
-    GraftExpressions.register(spark)
     require(k > 0, s"k must be positive, got $k")
     // The paper's clustering step in full: k-means cells from the shared
     // deterministic [[lloydFit]] (fingerprint-smallest init + fixed Lloyd
@@ -429,7 +422,6 @@ object Similarity {
     * probe touches only its cells' partitions. */
   def ivfTopK(spark: SparkSession, emb: DataFrame, nQueries: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    GraftExpressions.register(spark)
     val (assigned, centroidDf) = fitIvf(spark, emb, nCells)
     val q = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
@@ -453,7 +445,6 @@ object Similarity {
       k: Int, probes: Seq[Int], nCells: Int = 16): DataFrame = {
     require(probes.nonEmpty && probes.forall(p => p >= 1 && p <= nCells),
       s"probes must be in [1, $nCells], got $probes")
-    GraftExpressions.register(spark)
     val (assigned, centroidDf) = fitIvf(spark, emb, nCells)
     val q = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -533,7 +524,6 @@ object Similarity {
   def buildIvfIndex(spark: SparkSession, emb: DataFrame, dir: String,
       nCells: Int = 16, quantized: Boolean = false): Unit =
     graft.util.PhaseTimer.time("index_build") {
-      GraftExpressions.register(spark)
       val (assigned, centroidDf) = fitIvf(spark, emb, nCells)
       centroidDf.write.mode("overwrite").parquet(s"$dir/centroids")
       val table =
@@ -557,7 +547,6 @@ object Similarity {
     * doubles round-trip parquet exactly (asserted in SimilaritySpec). */
   def ivfTopKAgainstIndex(spark: SparkSession, queries: DataFrame, dir: String,
       k: Int, nProbe: Int = 4): DataFrame = {
-    GraftExpressions.register(spark)
     val q = normed(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     val assigned = spark.read.parquet(s"$dir/assigned")
@@ -629,11 +618,10 @@ object Similarity {
     * cut, and the reranked cosine — is oracle-replayable.
     *
     * Output: (query_id, rank, neighbor_id, cos_sim), rank 1..k. */
-  def binaryTopK(spark: SparkSession, emb: DataFrame, nQueries: Int, k: Int,
+  def binaryTopK(emb: DataFrame, nQueries: Int, k: Int,
       rerank: Int = 32): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(rerank >= k, s"rerank pool ($rerank) must cover k ($k)")
-    GraftExpressions.register(spark)
     val n = normed(emb)
     val code = (0 until BinaryBits)
       .map(d => when(element_at(col("v"), d + 1) > 0d, lit(1L << d)).otherwise(lit(0L)))
@@ -684,7 +672,6 @@ object Similarity {
     * L2 from the pick to its nearest predecessor (0.0 for the seed),
     * the nonincreasing covering-radius trace. */
   def kCenterGreedy(spark: SparkSession, emb: DataFrame, k: Int): DataFrame = {
-    GraftExpressions.register(spark)
     require(k > 0, s"k must be positive, got $k")
     import spark.implicits._
     val n = normed(emb).select(col("vec_id"), col("v"))
@@ -746,7 +733,6 @@ object Similarity {
     * {positive, hard_neg, rand_neg}. */
   def contrastivePairs(spark: SparkSession, emb: DataFrame, nQueries: Int,
       nHard: Int, nRand: Int, seed: String): DataFrame = {
-    GraftExpressions.register(spark)
     require(nHard >= 0 && nRand >= 0 && nHard + nRand > 0,
       s"need at least one negative, got nHard=$nHard nRand=$nRand")
     // checkpointed: feeds both the labeled output and the random-negative
@@ -850,7 +836,6 @@ object Similarity {
   def kmeansPlusPlusSeed(spark: SparkSession, emb: DataFrame, k: Int,
       seed: String): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    GraftExpressions.register(spark)
     import spark.implicits._
     // lazy checkpoints (the Bpe.learnMerges discipline): the first-seed
     // TakeOrdered below materializes n; each round's inertia aggregate
@@ -906,7 +891,6 @@ object Similarity {
     * recentering, so assignment and returned centroids agree). */
   private[operators] def lloydFit(spark: SparkSession, emb: DataFrame, k: Int,
       iterations: Int): (DataFrame, Seq[(Long, Seq[Double])]) = {
-    GraftExpressions.register(spark)
     require(k > 0, s"k must be positive, got $k")
     require(iterations > 0, s"iterations must be positive, got $iterations")
     import spark.implicits._
@@ -1007,9 +991,8 @@ object Similarity {
     * vectors never meet the corpus), ranked by the bounded k-heap.
     * No stage touches more than codes + a broadcast at any corpus
     * size. */
-  def pqTopK(spark: SparkSession, emb: DataFrame, nQueries: Int, k: Int,
+  def pqTopK(emb: DataFrame, nQueries: Int, k: Int,
       dim: Int = 64, nSub: Int = 8, codebookK: Int = 16): DataFrame = {
-    GraftExpressions.register(spark)
     require(nSub > 0 && dim % nSub == 0, s"dim $dim not a multiple of nSub $nSub")
     require(codebookK > 0 && k > 0 && nQueries > 0,
       s"codebookK/k/nQueries must be positive")
@@ -1097,7 +1080,6 @@ object Similarity {
   def buildPqIndex(spark: SparkSession, emb: DataFrame, dir: String,
       dim: Int = 64, nSub: Int = 8, codebookK: Int = 16): Unit =
     graft.util.PhaseTimer.time("index_build") {
-      GraftExpressions.register(spark)
       require(nSub > 0 && dim % nSub == 0, s"dim $dim not a multiple of nSub $nSub")
       require(codebookK > 0, s"codebookK must be positive")
       val subDim = dim / nSub
@@ -1120,7 +1102,6 @@ object Similarity {
     * SimilaritySpec AND by the v11 oracle, which is v09's). */
   def pqTopKAgainstIndex(spark: SparkSession, queries: DataFrame,
       dir: String, k: Int): DataFrame = {
-    GraftExpressions.register(spark)
     require(k > 0, s"k must be positive, got $k")
     val (dim, nSub, codebookK) = readPqParams(spark, dir)
     val _ = codebookK // layout-descriptive; probing needs dim/nSub only
@@ -1184,10 +1165,9 @@ object Similarity {
     * the code table against the broadcast (query, probed-cell) distance
     * tables on the cell id — members of unprobed cells are never
     * touched, which is the IVF contract. */
-  def ivfPqTopK(spark: SparkSession, emb: DataFrame, nQueries: Int, k: Int,
+  def ivfPqTopK(emb: DataFrame, nQueries: Int, k: Int,
       dim: Int = 64, nSub: Int = 8, codebookK: Int = 16,
       nCells: Int = 8, nProbe: Int = 3): DataFrame = {
-    GraftExpressions.register(spark)
     require(nSub > 0 && dim % nSub == 0, s"dim $dim not a multiple of nSub $nSub")
     require(nProbe > 0 && nProbe <= nCells,
       s"nProbe $nProbe must be in 1..$nCells")
@@ -1337,9 +1317,8 @@ object Similarity {
     * ~14% of the corpus per query with ~45% recall of θ≈66° neighbors —
     * on *clustered* corpora (near-dup mining, θ small) recall approaches
     * 1 while still skipping most of the corpus. Tune per workload. */
-  def lshTopK(spark: SparkSession, emb: DataFrame, nQueries: Int, k: Int,
+  def lshTopK(emb: DataFrame, nQueries: Int, k: Int,
       numPlanes: Int = 8, maxHamming: Int = 2): DataFrame = {
-    GraftExpressions.register(spark)
     val n = withSignature(normed(emb), numPlanes)
     val q = n.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -1360,9 +1339,8 @@ object Similarity {
     * with [[mipsTopK]]'s augmentation (the zero vector's inner product
     * with everything is 0 and its "direction" is undefined). Output:
     * (query_id, rank, neighbor_id, dot). */
-  def mipsExactForQueries(spark: SparkSession, emb: DataFrame,
+  def mipsExactForQueries(emb: DataFrame,
       queryPred: Column, k: Int): DataFrame = {
-    GraftExpressions.register(spark)
     val n = normed(emb)
     val q = n.filter(queryPred && col("nrm") > 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -1393,9 +1371,8 @@ object Similarity {
     * broadcast back, the lift is a per-row map, and the signature filter
     * prunes the corpus before any dot is computed. Output: (query_id,
     * rank, neighbor_id, dot). */
-  def mipsTopK(spark: SparkSession, emb: DataFrame, nQueries: Int, k: Int,
+  def mipsTopK(emb: DataFrame, nQueries: Int, k: Int,
       numPlanes: Int = 8, maxHamming: Int = 2): DataFrame = {
-    GraftExpressions.register(spark)
     require(numPlanes <= 31, "single-band signature packs into an int")
     val n = normed(emb)
     val m = n.agg(max(col("nrm")).as("m_norm"))

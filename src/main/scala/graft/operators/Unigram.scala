@@ -37,7 +37,6 @@ object Unigram {
   final case class Piece(piece: String, cnt: Long, logp: Double)
 
   private val caches = new graft.util.CacheRegistry
-  def releaseCaches(): Unit = caches.releaseAll()
 
   /** Distinct-word frequency table: (word, wfreq). The one corpus-sized
     * step; everything downstream is vocabulary-sized. */
@@ -124,7 +123,6 @@ object Unigram {
     * speed over the vocabulary-sized word table. */
   def encodeWords(docs: DataFrame, vocab: Seq[Piece],
       textCol: String = "text"): DataFrame = {
-    GraftExpressions.register(docs.sparkSession)
     wordFrequencies(docs, textCol)
       .withColumn("_ps",
         call_function("graft_unigram_encode", col("word"), lit(pieceSpec(vocab))))
@@ -148,7 +146,6 @@ object Unigram {
       textCol: String = "text"): Seq[Piece] = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     require(seedMultiplier >= 1, s"seedMultiplier must be >= 1, got $seedMultiplier")
-    GraftExpressions.register(docs.sparkSession)
     val words = caches.track(wordFrequencies(docs, textCol))
     val singles = words
       .select(explode(transform(sequence(lit(1), length(col("word"))),

@@ -33,7 +33,6 @@ import graft.functions.GraftExpressions
 object WordPiece {
 
   private val caches = new graft.util.CacheRegistry
-  def releaseCaches(): Unit = caches.releaseAll()
 
   /** Position-classed weighted substring counts: (piece, cnt) where
     * word-initial substrings are bare and others carry `##` — the
@@ -108,7 +107,6 @@ object WordPiece {
   def learnMerges(docs: DataFrame, nMerges: Int,
       textCol: String = "text"): Seq[Merge] = {
     require(nMerges > 0, s"nMerges must be positive, got $nMerges")
-    GraftExpressions.register(docs.sparkSession)
     // lazy checkpoints (the Bpe.learnMerges discipline): the plan
     // truncates immediately, the blocks materialize inside the round's
     // argmax job — one action per round instead of checkpoint + argmax,
@@ -160,7 +158,6 @@ object WordPiece {
     * tokenizer-decode gates are directly comparable. */
   def encodeWords(docs: DataFrame, vocab: Seq[String],
       textCol: String = "text"): DataFrame = {
-    GraftExpressions.register(docs.sparkSession)
     val spec = GraftExpressions.encodeWordPieceVocab(vocab)
     Unigram.wordFrequencies(docs, textCol)
       .withColumn("_ps",

@@ -54,13 +54,7 @@ object Domain {
     flatCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => })
     flatCache.clear()
     Corpus.clearCache()
-    graft.operators.Dedup.releaseCaches()
-    graft.operators.Sampling.releaseCaches()
-    graft.operators.Quality.releaseCaches()
-    graft.operators.Unigram.releaseCaches()
-    graft.operators.WordPiece.releaseCaches()
-    graft.operators.Graph.releaseCaches()
-    Text.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     // per-name stream-override observability entries (tiny, but a
     // long-lived driver launching nanoTime-named streams would grow
     // the map without bound)
@@ -401,7 +395,6 @@ object Domain {
     * bounded sketch state is the published answer to exactly that
     * gap, which is the point of this query). */
   private def p10(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExpressions.register(spark)
     val regs = eventsStream(spark, dir)
       .groupBy(col("event_type"))
       .agg(expr("graft_hll_sketch(CAST(user_id AS STRING), 8)").as("regs"))
@@ -447,7 +440,6 @@ object Domain {
     * matrix — depth×width longs per group — is what a streaming job
     * ships, never a per-user table). */
   private def p11(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExpressions.register(spark)
     val depth = 4
     val width = 32
     val mat = SilverStream.runToMemory(
@@ -517,7 +509,6 @@ object Domain {
     * the oracle replays. The t52 two-phase discipline, proven to
     * survive streaming. */
   private def p12(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExpressions.register(spark)
     val k = 30
     val toks = tableStream(spark, dir, "documents")
       .select(col("lang"), explode(tokens(col("text"))).as("token"))
@@ -564,7 +555,6 @@ object Domain {
     * At 100 TB the filter is the artifact a streaming job ships: 4096
     * bits per type, regardless of user cardinality. */
   private def p13(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExpressions.register(spark)
     val numHashes = 2
     val numBits = 4096 // 64 words; ~7% load at sf0.01, ~52% at sf0.1 — real FP pressure
     val bits = SilverStream.runToMemory(
@@ -650,7 +640,6 @@ object Domain {
     * streaming job ships is k ids per group — independent of stream
     * length. */
   private def p14(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExpressions.register(spark)
     val k = 128
     val u = graft.operators.Sampling.portableUniformFingerprint(
       concat(lit("kmv-p14:"), col("event_id").cast("string"))).cast("double")

@@ -985,7 +985,7 @@ object Relational {
     * unsalted join aggregate. Salt is hash-derived from event_id
     * (deterministic, no rand()); the dim replicates ×16, which at dim
     * sizes worth salting for is noise next to the hot reducer it
-    * removes (measured A/B: tools/SkewAB). */
+    * removes (measured r14 A/B, see [[graft.operators.Skew]]). */
   private def q48(spark: SparkSession, dir: String): DataFrame = {
     val ev = Corpus.events(spark, dir)
       .withColumn("join_key",

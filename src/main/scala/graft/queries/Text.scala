@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.io.Corpus
-import graft.functions.{GraftExpressions, TextFunctions}
+import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Bpe, Dedup, Retrieval, Similarity}
 
@@ -42,14 +42,10 @@ object Text {
   private[queries] def mixSql(e: String): String =
     s"((${foldSql(e)}) * 2654435761) % 2147483647"
 
-  // Frames shared by multiple plan branches persist here and are freed by
-  // [[releaseCaches]] (wired into Domain.clearCache for long-lived
-  // drivers); see graft.util.CacheRegistry for the lifecycle.
+  // Frames shared by multiple plan branches persist here; see
+  // graft.util.CacheRegistry for the lifecycle.
   private val caches = new graft.util.CacheRegistry
   private def tracked(df: DataFrame): DataFrame = caches.track(df)
-
-  /** Unpersists every cache created by the text queries. */
-  def releaseCaches(): Unit = caches.releaseAll()
 
   /** Token counting: whitespace tokens, BPE-ish subword count, mean token
     * length. */
@@ -195,7 +191,6 @@ object Text {
     * is demonstrated inside other oracle-passing queries (t23/t26 key
     * their shuffles on it), so it no longer needs a column here. */
   private def t04(spark: SparkSession, dir: String): DataFrame = {
-    GraftExpressions.register(spark)
     Corpus.documents(spark, dir)
       .select(
         col("doc_id"),
@@ -587,7 +582,6 @@ object Text {
   private val DupFracMax = 0.65
 
   private def t18(spark: SparkSession, dir: String): DataFrame = {
-    GraftExpressions.register(spark)
     docSignals(Corpus.documents(spark, dir))
       .filter(col("n_tokens") >= 2)
       .withColumn("bg", TextFunctions.ngramsAll(col("toks"), 2))
@@ -1316,7 +1310,6 @@ object Text {
     * scan+explode for a ~10× narrower shuffle — the right trade at 100 TB
     * where the shuffle, not the scan, is the bottleneck. */
   private def t23(spark: SparkSession, dir: String): DataFrame = {
-    GraftExpressions.register(spark)
     def grams = Corpus.documents(spark, dir)
       .select(col("doc_id"),
         explode(expr("graft_ngrams(text, 16)")).as("gram"))
@@ -2344,7 +2337,6 @@ object Text {
     * rel_err. Completes the mergeable-sketch family's last asymmetry —
     * MG/CMS/Bloom/HLL all now answer approximately AND gate exactly. */
   private def t59(spark: SparkSession, dir: String): DataFrame = {
-    GraftExpressions.register(spark)
     val grams = Corpus.documents(spark, dir)
       .select(col("lang"),
         explode(expr("graft_ngrams(text, 13)")).as("gram"))
@@ -2605,7 +2597,6 @@ object Text {
     // stage). Bit-identical to the interpreted transform/struct chain;
     // under-2-token docs yield an empty array, which explode drops —
     // the same rows the old size(sp) >= 2 filter removed.
-    graft.functions.GraftExpressions.register(spark)
     val pairs = Corpus.documents(spark, dir)
       .select(col("lang"),
         explode(expr("graft_bigram_pairs(text)")).as("b"))
@@ -2671,7 +2662,6 @@ object Text {
     // Bit-identical: "w1 w2" strings over single-space tokens, empty
     // array under 2 tokens — which explode drops, exactly the rows the
     // old size(sp) >= 2 filter removed.
-    graft.functions.GraftExpressions.register(spark)
     val docs = Corpus.documents(spark, dir)
       .withColumn("units", expr("graft_ngrams(text, 2)"))
     graft.operators.Quality.goodTuring(docs, "lang", col("units"), maxR = 10)
@@ -3093,7 +3083,6 @@ object Text {
     * no lookup table, no shuffle, no state; the one operator in the
     * privacy family that is embarrassingly parallel at 100 TB. */
   private def t74(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExpressions.register(spark)
     val dirty = concat(col("text"),
       lit(" contact user"), pmod(col("doc_id"), lit(50)).cast("string"),
       lit("@example.com or 555-01"), col("doc_id").cast("string"))
@@ -3316,7 +3305,6 @@ object Text {
     * |suffixes| rows, and the share window runs on that aggregated
     * frame, not the corpus. */
   private def t78(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExpressions.register(spark)
     val idx = (col("doc_id") % 10 + 1).cast("int")
     val pres = array(t78HostShapes.map(s => lit(s._1)): _*)
     val posts = array(t78HostShapes.map(s => lit(s._2)): _*)

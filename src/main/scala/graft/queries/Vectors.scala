@@ -66,7 +66,7 @@ object Vectors {
     * planted corpus and brute-forces all pairs, so this checks both the
     * exact arithmetic AND that banding recalled every qualifying pair. */
   private def v02(spark: SparkSession, dir: String): DataFrame =
-    Similarity.nearDupPairs(spark, plantedEmbeddings(spark, dir), threshold = 0.9)
+    Similarity.nearDupPairs(plantedEmbeddings(spark, dir), threshold = 0.9)
 
   // CTE chain shared by the v02 pair oracle and the v06 clustering
   // oracle: rebuild the planted corpus, norm it, brute-force all pairs.
@@ -149,7 +149,7 @@ object Vectors {
   private def v03(spark: SparkSession, dir: String): DataFrame = {
     val emb = Corpus.embeddings(spark, dir)
     Similarity.withMeasuredRecall(
-      Similarity.lshTopK(spark, emb, nQueries = 5, k = 10),
+      Similarity.lshTopK(emb, nQueries = 5, k = 10),
       Similarity.cosineTopKForQueries(spark, emb, recallSample(5), k = 10))
   }
 
@@ -886,7 +886,7 @@ object Vectors {
     * component labeling over embedding-space edges. */
   private def v06(spark: SparkSession, dir: String): DataFrame =
     Dedup.dupClusters(
-      Similarity.nearDupPairs(spark, plantedEmbeddings(spark, dir), threshold = 0.9)
+      Similarity.nearDupPairs(plantedEmbeddings(spark, dir), threshold = 0.9)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("cluster_size"))
       .orderBy(col("vec_id"))
@@ -985,7 +985,7 @@ object Vectors {
     * (adist asc, vec_id asc) ranking — hash-gating codes and distances
     * end to end. */
   private def v09(spark: SparkSession, dir: String): DataFrame =
-    Similarity.pqTopK(spark, Corpus.embeddings(spark, dir), nQueries = 5,
+    Similarity.pqTopK(Corpus.embeddings(spark, dir), nQueries = 5,
       k = 10, dim = 64, nSub = 8, codebookK = 16)
 
   private val v09Sql = {
@@ -1030,7 +1030,7 @@ object Vectors {
     * the final ranking — end-to-end hash-gated, which the KMeans-based
     * v04/v05 family cannot be. */
   private def v10(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfPqTopK(spark, Corpus.embeddings(spark, dir), nQueries = 5,
+    Similarity.ivfPqTopK(Corpus.embeddings(spark, dir), nQueries = 5,
       k = 10, dim = 64, nSub = 8, codebookK = 16, nCells = 8, nProbe = 3)
 
   private val v10Sql = {
@@ -1115,7 +1115,7 @@ object Vectors {
     * popcount distance, the candidate cut (ties on vec_id), and the
     * reranked cosine ordering. */
   private def v12(spark: SparkSession, dir: String): DataFrame =
-    Similarity.binaryTopK(spark, Corpus.embeddings(spark, dir),
+    Similarity.binaryTopK(Corpus.embeddings(spark, dir),
       nQueries = 8, k = 10, rerank = 32)
 
   private val v12Sql =
@@ -1308,8 +1308,8 @@ object Vectors {
   private def v17(spark: SparkSession, dir: String): DataFrame = {
     val emb = Corpus.embeddings(spark, dir)
     Similarity.withMeasuredRecall(
-      Similarity.mipsTopK(spark, emb, nQueries = 5, k = 10),
-      Similarity.mipsExactForQueries(spark, emb, recallSample(5), k = 10))
+      Similarity.mipsTopK(emb, nQueries = 5, k = 10),
+      Similarity.mipsExactForQueries(emb, recallSample(5), k = 10))
   }
 
   private val v17Sql = {
@@ -1460,7 +1460,7 @@ object Vectors {
     * rows wherever the prefix ordering disagrees with the full
     * ordering at the overfetch margin. */
   private def v20(spark: SparkSession, dir: String): DataFrame =
-    Similarity.matryoshkaTopK(spark, Corpus.embeddings(spark, dir),
+    Similarity.matryoshkaTopK(Corpus.embeddings(spark, dir),
       nQueries = 5, k = 10, prefixDims = 16, overfetch = 4)
 
   private val v20Sql = {
@@ -1504,7 +1504,7 @@ object Vectors {
     * engine's smaller-id tie-break, the growing selected set), so every
     * sequential pick — not just the final set — is hash-gated. */
   private def v21(spark: SparkSession, dir: String): DataFrame =
-    Similarity.mmrTopK(spark, Corpus.embeddings(spark, dir),
+    Similarity.mmrTopK(Corpus.embeddings(spark, dir),
       nQueries = 5, k = 8, poolC = 25, lambda = 0.7)
 
   private val v21Sql = {

@@ -59,8 +59,14 @@ object ServeApi {
       else respond(ex, 404, jsonObj(Seq("error" -> "not found")))
     })
     // small fixed pool: request handling is IO-light, the work happens in
-    // the Spark jobs the handlers trigger
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    // the Spark jobs the handlers trigger. Daemon threads: `stop` never
+    // shuts the executor down, so its idle threads must not keep the JVM
+    // alive after the server stops.
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, "graft-serve")
+      t.setDaemon(true)
+      t
+    }))
     server.start()
     server
   }

@@ -6,12 +6,15 @@ import org.apache.spark.storage.StorageLevel
 /** Registry for persisted intermediates that feed multiple plan branches
   * (Catalyst does not CSE across branches, so an unpersisted shared frame
   * re-executes its whole upstream plan per branch). Operators persist
-  * through [[track]]; long-lived drivers free everything via
-  * [[releaseAll]] (each owner's release hook is wired into
-  * `graft.queries.Domain.clearCache`). One-shot Verify/Bench runs never
-  * need to release. */
+  * through [[track]]. Every registry records itself with the companion
+  * when it is constructed, so [[CacheRegistry.releaseAll]] frees every
+  * operator's frames at once: Bench's per-query cleanup and
+  * `graft.queries.Domain.clearCache` (long-lived drivers, and the
+  * session-close backstop) call it. One-shot Verify runs never need to
+  * release. */
 final class CacheRegistry {
   private val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
+  CacheRegistry.record(this)
 
   def track(df: DataFrame): DataFrame = synchronized {
     val persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -27,4 +30,13 @@ final class CacheRegistry {
     live.foreach(df => try df.unpersist() catch { case _: Throwable => () })
     live.clear()
   }
+}
+
+object CacheRegistry {
+  private val all = scala.collection.mutable.ListBuffer.empty[CacheRegistry]
+
+  private def record(r: CacheRegistry): Unit = synchronized { all += r }
+
+  /** Releases the frames of every registry constructed so far. */
+  def releaseAll(): Unit = synchronized { all.foreach(_.releaseAll()) }
 }

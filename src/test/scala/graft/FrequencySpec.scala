@@ -78,7 +78,6 @@ class FrequencySpec extends SparkTestBase {
   }
 
   test("graft_mg_sketch rejects non-string input with a descriptive error") {
-    graft.functions.GraftExpressions.register(spark)
     val ex = intercept[Exception] {
       Seq((1L, "a")).toDF("doc_id", "text")
         .agg(expr("graft_mg_sketch(doc_id, 3)")).collect()
@@ -218,7 +217,6 @@ class FrequencySpec extends SparkTestBase {
     // the algebra cmsJoinSize's one-scan-per-side build rests on:
     // folding (key, freq) through graft_cms_sketch_w is bit-identical
     // to one graft_cms_sketch increment per raw row, at any partitioning
-    graft.functions.GraftExpressions.register(spark)
     val raw = Seq("k1", "k1", "k1", "k2", "k2", "k3", null).zipWithIndex
       .map { case (k, i) => (i.toLong, k) }.toDF("id", "k").repartition(5)
     val fromRaw = raw

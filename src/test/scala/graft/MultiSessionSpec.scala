@@ -1,11 +1,12 @@
 package graft
 
 /** Multi-session robustness (the r15–r16 ADVICE theme): the engine's
-  * session-scoped machinery — function registration (GraftExpressions
-  * registers into the SESSION's function registry), the (session, dir)
-  * memoization caches behind silverFlat, and the stream-stage cache's
-  * per-session ownership — must let two sessions of one SparkContext
-  * run the same queries independently and agree on results. */
+  * session-scoped machinery — the `graft_*` functions every session gets
+  * at build time (GraftSession.configure injects them), the (session,
+  * dir) memoization caches behind silverFlat, and the stream-stage
+  * cache's per-session ownership — must let two sessions of one
+  * SparkContext run the same queries independently and agree on
+  * results. */
 class MultiSessionSpec extends SparkTestBase {
 
   private def rows(name: String, s: org.apache.spark.sql.SparkSession): Seq[String] = {
@@ -18,7 +19,7 @@ class MultiSessionSpec extends SparkTestBase {
     val s2 = spark.newSession()
     // q06: the flagship join+agg (exercises Corpus reads + dsum);
     // p02: exercises the (session, dir)-keyed silverFlat cache;
-    // v01: exercises per-session GraftExpressions registration
+    // v01: exercises the child session's injected graft_* functions
     for (q <- Seq("q06_region_customer_stats", "p02_courier_metrics", "v01_cosine_topk")) {
       assert(rows(q, s2) === rows(q, spark), s"$q must agree across sessions")
     }
@@ -26,6 +27,22 @@ class MultiSessionSpec extends SparkTestBase {
     assert(graft.queries.Domain.silverFlat(spark, sf0001) ne
       graft.queries.Domain.silverFlat(s2, sf0001),
       "silverFlat memoization must be per-session, not shared")
+  }
+
+  test("a fresh child session has every graft_* function without registration") {
+    val s2 = spark.newSession()
+    assert(s2.sql("SELECT graft_fold31('a@b.com')").head().getLong(0) ===
+      graft.functions.Fold31.fold(org.apache.spark.unsafe.types.UTF8String.fromString("a@b.com")))
+    val names = Seq("graft_rolling_hash", "graft_dot", "graft_jaccard_sorted",
+      "graft_inter_sorted", "graft_lsh_bands", "graft_topk", "graft_multiq_topk",
+      "graft_mmr", "graft_mode_count", "graft_fold31", "graft_pseudonymize",
+      "graft_registered_domain", "graft_shingles", "graft_ngrams",
+      "graft_bigram_pairs", "graft_bpe_apply", "graft_bpe_step", "graft_merge_step",
+      "graft_unigram_encode", "graft_mg_sketch", "graft_cms_sketch",
+      "graft_cms_sketch_w", "graft_bloom_sketch", "graft_hll_sketch",
+      "graft_wordpiece_encode", "graft_blocklist")
+    assert(graft.functions.GraftExpressions.functions.map(_._1.funcName).sorted === names.sorted)
+    assert(names.filterNot(s2.catalog.functionExists) === Nil)
   }
 
   test("stream state-shard override never touches the caller session's conf") {

@@ -174,7 +174,7 @@ class PlanSpec extends SparkTestBase {
         (graft.operators.Similarity.cosineTopKForQueriesImpl(spark,
           Corpus.embeddings(spark, sf0001), col("vec_id") < 5, 10, fused = true),
           "partial_graft_multiq_topk"),
-        (graft.operators.Similarity.lshTopK(spark, Corpus.embeddings(spark, sf0001), 5, 10),
+        (graft.operators.Similarity.lshTopK(Corpus.embeddings(spark, sf0001), 5, 10),
           "partial_graft_topk"))) {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("ObjectHashAggregate"), s"expected ObjectHashAggregate:\n$plan")
@@ -518,9 +518,9 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("v20 matryoshka fused branch: prefix kernel stage 1, no pair-materializing join") {
-    // the branch deployment-size corpora take (tools/WideEmb measured it
+    // the branch deployment-size corpora take (the r15 A/B measured it
     // 1.2-2x over fused-exact at 8x byte ratio)
-    val plan = graft.operators.Similarity.matryoshkaTopKImpl(spark,
+    val plan = graft.operators.Similarity.matryoshkaTopKImpl(
         Corpus.embeddings(spark, sf0001), nQueries = 5, k = 10,
         prefixDims = 16, overfetch = 4, fused = true)
       .queryExecution.executedPlan.toString

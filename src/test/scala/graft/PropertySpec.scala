@@ -78,7 +78,6 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("rolling hash equals reference on arbitrary unicode strings") {
-    graft.functions.GraftExpressions.register(spark)
     def ref(s: String): Long =
       s.getBytes("UTF-8").foldLeft(0L)((h, b) => h * 31L + (b & 0xffL))
     val strs = sample(Gen.listOfN(12, Gen.choose(32.toChar, 0x2FF.toChar)).map(_.mkString), 50)
@@ -103,7 +102,6 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("mode count equals reference max frequency on arbitrary token lists") {
-    graft.functions.GraftExpressions.register(spark)
     val toksGen = Gen.chooseNum(0, 20).flatMap(k =>
       Gen.listOfN(k, Gen.oneOf("a", "b", "c")))
     val lists = sample(toksGen, 80)

@@ -57,6 +57,18 @@ class ServeApiSpec extends SparkTestBase {
     } finally server.stop(0)
   }
 
+  test("a stopped server leaves no non-daemon thread alive") {
+    import scala.jdk.CollectionConverters._
+    def liveNonDaemon(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = liveNonDaemon()
+    val server = ServeApi.start(silver, model = None, ServeApi.Config(asOfDate = "2024-06-01"))
+    try assert(get(server, "/")._1 === 200)
+    finally server.stop(0)
+    val left = liveNonDaemon() -- before
+    assert(left.isEmpty, s"threads that keep the JVM alive: ${left.map(_.getName)}")
+  }
+
   test("unknown keys and missing params answer with JSON errors, not 500s") {
     val server = ServeApi.start(silver, model = None, ServeApi.Config(asOfDate = "2024-06-01"))
     try {

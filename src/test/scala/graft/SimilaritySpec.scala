@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftExpressions
 import graft.io.Corpus
 import graft.operators.Similarity
 
@@ -12,7 +11,6 @@ class SimilaritySpec extends SparkTestBase {
   import spark.implicits._
 
   test("graft_dot matches manual dot product (codegen + interpreted)") {
-    GraftExpressions.register(spark)
     val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
     assert(df.select(expr("graft_dot(a, b)")).as[Double].head() === 32.0)
     // force interpreted path too (eval via filter on driver-side literal)
@@ -21,7 +19,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("fused multi-query kernel ≡ the join form it replaced (multi-partition, self-excluded)") {
-    GraftExpressions.register(spark)
     // 200 deterministic 6-dim vectors over 8 partitions so partial
     // buffers genuinely merge; 4 queries
     val vecs = spark.range(200).repartition(8)
@@ -56,7 +53,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("ragged embedding widths fail loudly in graft_dot and the fused kernel (no silent prefix)") {
-    GraftExpressions.register(spark)
     // codegen path
     val ragged = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 2.0))).toDF("a", "b")
     val e1 = intercept[Exception] {
@@ -90,7 +86,6 @@ class SimilaritySpec extends SparkTestBase {
     // over vec_id (the crossJoin branch used to evaluate it against
     // normed()'s frame, where 'embedding' is dropped) are the two
     // hazards. Both branches canonicalize to (vec_id: long, embedding).
-    GraftExpressions.register(spark)
     val vecs = Seq(
       (0, Array(1.0f, 0.0f)), (1, Array(0.8f, 0.6f)),
       (2, Array(0.0f, 1.0f)), (3, Array(-0.5f, 0.5f)))
@@ -110,7 +105,6 @@ class SimilaritySpec extends SparkTestBase {
     // the documented contract is an ARBITRARY predicate over the input
     // frame — including columns outside (vec_id, embedding); it must
     // hold at every corpus size, i.e. in both implicit branches
-    GraftExpressions.register(spark)
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f), true), (1L, Array(0.8f, 0.6f), false),
       (2L, Array(0.0f, 1.0f), true), (3L, Array(-0.5f, 0.5f), false))
@@ -128,7 +122,6 @@ class SimilaritySpec extends SparkTestBase {
     // spark.sql.defaultSizeInBytes = Long.MaxValue, so the size gate
     // must land on the fused kernel — a deployment corpus without
     // ANALYZE stats must never silently pick the |corpus|·Q crossJoin.
-    GraftExpressions.register(spark)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("embedding",
@@ -150,7 +143,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("multi-query kernel zero-norm contract: NaN default ranks first, -1.0 opt-in ranks last") {
-    GraftExpressions.register(spark)
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 0.0f)),  // zero vector
       (2L, Array(0.9f, 0.1f)), (3L, Array(-0.6f, 0.8f))) // cos -0.6 > the -1 guard
@@ -191,7 +183,7 @@ class SimilaritySpec extends SparkTestBase {
       (0L, Array(1.0f, 0.0f), 0), (1L, Array(0.99f, 0.01f), 0),
       (2L, Array(0.0f, 1.0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val pairs = Similarity.nearDupPairs(spark, vecs, threshold = 0.95)
+    val pairs = Similarity.nearDupPairs(vecs, threshold = 0.95)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((0L, 1L)))
   }
@@ -213,9 +205,9 @@ class SimilaritySpec extends SparkTestBase {
           x + lit(0.25) * element_at(col("embedding"),
             pmod(i + lit(1), size(col("embedding"))) + lit(1))).as("embedding"))
     val corpus = base.unionByName(planted)
-    val exact = Similarity.nearDupPairsExact(spark, corpus, 0.9)
+    val exact = Similarity.nearDupPairsExact(corpus, 0.9)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val banded = Similarity.nearDupPairs(spark, corpus, 0.9)
+    val banded = Similarity.nearDupPairs(corpus, 0.9)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty, s"$dir: planted dups must exist above the threshold")
     assert(banded === exact, s"$dir: banded missed ${exact -- banded}, extra ${banded -- exact}")
@@ -258,7 +250,7 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Corpus.embeddings(spark, sf0001)
     val exact = Similarity.cosineTopK(spark, emb, 5, 10)
       .as[(Long, Long, Long, Double)].collect().toSeq
-    val m = Similarity.matryoshkaTopK(spark, emb, 5, 10,
+    val m = Similarity.matryoshkaTopK(emb, 5, 10,
         prefixDims = 64, overfetch = 1)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(m === exact)
@@ -270,7 +262,7 @@ class SimilaritySpec extends SparkTestBase {
       .select("query_id", "neighbor_id", "cos_sim")
       .as[(Long, Long, Double)].collect()
     val exactSet = exact.map(r => (r._1, r._2)).toSet
-    val got = Similarity.matryoshkaTopK(spark, emb, 5, 10,
+    val got = Similarity.matryoshkaTopK(emb, 5, 10,
         prefixDims = 16, overfetch = 4)
       .select("query_id", "neighbor_id", "cos_sim")
       .as[(Long, Long, Double)].collect()
@@ -308,7 +300,7 @@ class SimilaritySpec extends SparkTestBase {
     val exact = Similarity.cosineTopK(spark, vecs, nQueries = 1, k = 2)
       .select("neighbor_id").as[Long].collect().toSeq
     assert(exact === Seq(10L, 11L))
-    val mmr = Similarity.mmrTopK(spark, vecs, nQueries = 1, k = 2,
+    val mmr = Similarity.mmrTopK(vecs, nQueries = 1, k = 2,
         poolC = 3, lambda = 0.7)
       .select("rank", "neighbor_id", "mmr_score", "cos_sim")
       .as[(Long, Long, Double, Double)].collect()
@@ -324,7 +316,7 @@ class SimilaritySpec extends SparkTestBase {
     val exact = Similarity.cosineTopK(spark, emb, 5, 8)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
       .as[(Long, Long, Long, Double)].collect().toSeq
-    val mmr = Similarity.mmrTopK(spark, emb, 5, 8, poolC = 8, lambda = 1.0)
+    val mmr = Similarity.mmrTopK(emb, 5, 8, poolC = 8, lambda = 1.0)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(mmr === exact)
@@ -332,9 +324,9 @@ class SimilaritySpec extends SparkTestBase {
 
   test("mmrTopK is invariant under input partitioning") {
     val emb = Corpus.embeddings(spark, sf0001)
-    val base = Similarity.mmrTopK(spark, emb, 3, 5, poolC = 12, lambda = 0.7)
+    val base = Similarity.mmrTopK(emb, 3, 5, poolC = 12, lambda = 0.7)
       .as[(Long, Long, Long, Double, Double)].collect().toSeq
-    val again = Similarity.mmrTopK(spark, emb.repartition(13), 3, 5,
+    val again = Similarity.mmrTopK(emb.repartition(13), 3, 5,
         poolC = 12, lambda = 0.7)
       .as[(Long, Long, Long, Double, Double)].collect().toSeq
     assert(again === base)
@@ -407,7 +399,7 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Corpus.embeddings(spark, sf0001)
     val brute = Similarity.cosineTopK(spark, emb, 5, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(spark, emb, 5, 10)
+    val approx = Similarity.lshTopK(emb, 5, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (brute & approx).size.toDouble / brute.size
     // near-uniform corpus: LSH trades recall for ~14% candidate volume;
@@ -606,7 +598,7 @@ class SimilaritySpec extends SparkTestBase {
       (4L, v(pA, pB), 0), (5L, v(pB, pA), 1),
       (6L, v(pA, pA), 0), (7L, v(pB, pB), 1))
       .toDF("vec_id", "embedding", "label")
-    val out = Similarity.pqTopK(spark, vecs, nQueries = 2, k = 7,
+    val out = Similarity.pqTopK(vecs, nQueries = 2, k = 7,
         dim = 4, nSub = 2, codebookK = 4)
       .select("query_id", "rank", "neighbor_id", "adist")
       .as[(Long, Long, Long, Double)].collect()
@@ -638,7 +630,7 @@ class SimilaritySpec extends SparkTestBase {
     val q0 = vec()
     val vecs = ((0L, q0, 0) +: (1L to 30L).map(i => (i, vec(), 0)) :+ (99L, q0, 0))
       .toDF("vec_id", "embedding", "label")
-    val out = Similarity.ivfPqTopK(spark, vecs, nQueries = 1, k = 5,
+    val out = Similarity.ivfPqTopK(vecs, nQueries = 1, k = 5,
         dim = 8, nSub = 4, codebookK = 4, nCells = 1, nProbe = 1)
       .select("query_id", "rank", "neighbor_id", "adist")
       .as[(Long, Long, Long, Double)].collect()
@@ -653,8 +645,8 @@ class SimilaritySpec extends SparkTestBase {
 
   test("ivfPqTopK results are invariant to input partitioning") {
     val emb = Corpus.embeddings(spark, sf0001)
-    val a = Similarity.ivfPqTopK(spark, emb, nQueries = 3, k = 5).collect()
-    val b = Similarity.ivfPqTopK(spark, emb.repartition(7), nQueries = 3, k = 5).collect()
+    val a = Similarity.ivfPqTopK(emb, nQueries = 3, k = 5).collect()
+    val b = Similarity.ivfPqTopK(emb.repartition(7), nQueries = 3, k = 5).collect()
     assert(a.toSeq === b.toSeq)
   }
 
@@ -664,7 +656,7 @@ class SimilaritySpec extends SparkTestBase {
     Similarity.buildPqIndex(spark, emb, idx, dim = 64, nSub = 8, codebookK = 16)
     val persisted = Similarity.pqTopKAgainstIndex(spark,
       emb.filter(col("vec_id") < 3), idx, k = 8).collect()
-    val inMemory = Similarity.pqTopK(spark, emb, nQueries = 3, k = 8).collect()
+    val inMemory = Similarity.pqTopK(emb, nQueries = 3, k = 8).collect()
     assert(persisted.toSeq === inMemory.toSeq,
       "the code-table probe must reproduce the in-memory ADC ranking exactly")
     // the serving payload is codes + codebook only — no float vector table
@@ -695,12 +687,12 @@ class SimilaritySpec extends SparkTestBase {
       (1L, Array(0.0f, 1.0f), 1)) // 2-dim intruder
       .toDF("vec_id", "embedding", "label")
     val ex = intercept[Exception] {
-      Similarity.pqTopK(spark, vecs, nQueries = 1, k = 2,
+      Similarity.pqTopK(vecs, nQueries = 1, k = 2,
         dim = 4, nSub = 2, codebookK = 2).collect()
     }
     assert(ex.getMessage != null)
     intercept[IllegalArgumentException] {
-      Similarity.pqTopK(spark, vecs, nQueries = 1, k = 2,
+      Similarity.pqTopK(vecs, nQueries = 1, k = 2,
         dim = 4, nSub = 3, codebookK = 2)
     }
   }
@@ -708,7 +700,7 @@ class SimilaritySpec extends SparkTestBase {
   test("binaryTopK with a full rerank pool equals exact cosineTopK") {
     val emb = Corpus.embeddings(spark, sf0001).limit(120)
     val exact = Similarity.cosineTopK(spark, emb, nQueries = 4, k = 5).collect().toSeq
-    val full = Similarity.binaryTopK(spark, emb, nQueries = 4, k = 5, rerank = 119)
+    val full = Similarity.binaryTopK(emb, nQueries = 4, k = 5, rerank = 119)
       .collect().toSeq
     assert(full === exact,
       "a rerank pool covering the whole corpus must reproduce brute force exactly")
@@ -718,15 +710,15 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Corpus.embeddings(spark, sf0001)
     val exact = Similarity.cosineTopK(spark, emb, nQueries = 8, k = 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.binaryTopK(spark, emb, nQueries = 8, k = 10, rerank = 32)
+    val approx = Similarity.binaryTopK(emb, nQueries = 8, k = 10, rerank = 32)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (approx intersect exact).size.toDouble / exact.size
     assert(recall >= 0.5,
       s"sign-bit Hamming should preserve most exact neighbors in the pool (got $recall)")
     // and the result is deterministic under partitioning
-    val again = Similarity.binaryTopK(spark, emb.repartition(7), nQueries = 8,
+    val again = Similarity.binaryTopK(emb.repartition(7), nQueries = 8,
       k = 10, rerank = 32).collect().toSeq
-    assert(again === Similarity.binaryTopK(spark, emb, nQueries = 8, k = 10,
+    assert(again === Similarity.binaryTopK(emb, nQueries = 8, k = 10,
       rerank = 32).collect().toSeq)
   }
 
@@ -738,7 +730,7 @@ class SimilaritySpec extends SparkTestBase {
     val vecs = Seq(
       (0L, base, 0), (1L, base.map(x => x * 2f), 0), (2L, flipped, 1))
       .toDF("vec_id", "embedding", "label")
-    val top = Similarity.binaryTopK(spark, vecs, nQueries = 1, k = 2, rerank = 2)
+    val top = Similarity.binaryTopK(vecs, nQueries = 1, k = 2, rerank = 2)
       .select("rank", "neighbor_id", "cos_sim").as[(Long, Long, Double)].collect()
     assert(top(0)._2 === 1L && math.abs(top(0)._3 - 1.0) < 1e-12,
       "the scaled copy (identical code, cosine 1) must rank first")
@@ -906,7 +898,7 @@ class SimilaritySpec extends SparkTestBase {
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.0f)),
       (2L, Array(5.0f, 5.0f)), (3L, Array(0.0f, 0.1f)))
       .toDF("vec_id", "embedding")
-    val exact = Similarity.mipsExactForQueries(spark, vecs, col("vec_id") === 0, k = 3)
+    val exact = Similarity.mipsExactForQueries(vecs, col("vec_id") === 0, k = 3)
       .as[(Long, Long, Long, Double)].collect()
     assert(exact.map(r => (r._2, r._3)).toSeq === Seq((1L, 2L), (2L, 1L), (3L, 3L)))
     assert(math.abs(exact.head._4 - 5.0) < 1e-9)
@@ -916,13 +908,13 @@ class SimilaritySpec extends SparkTestBase {
     // the norm-augmented approximate path at full Hamming radius (every
     // candidate scored) reproduces the exact MIPS ranking — the lift
     // changed bucketing only, never the verified score
-    val approx = Similarity.mipsTopK(spark, vecs, nQueries = 1, k = 3,
+    val approx = Similarity.mipsTopK(vecs, nQueries = 1, k = 3,
       numPlanes = 8, maxHamming = 8)
       .as[(Long, Long, Long, Double)].collect()
     assert(approx.map(r => (r._2, r._3, r._4)).toSeq ===
       exact.map(r => (r._2, r._3, r._4)).toSeq)
     // partitioning invariance of the lift (M is a corpus aggregate)
-    val again = Similarity.mipsTopK(spark, vecs.repartition(3), nQueries = 1,
+    val again = Similarity.mipsTopK(vecs.repartition(3), nQueries = 1,
       k = 3, numPlanes = 8, maxHamming = 8).collect()
     assert(again.map(_.toSeq).toSeq === approx.map(v =>
       Seq(v._1, v._2, v._3, v._4)).toSeq)

@@ -777,7 +777,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("CMS sketch as streaming aggregation state ≡ the batch matrix (additive merge)") {
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftExpressions.register(spark)
     val input = MemoryStream[(String, String)]
     val agg = input.toDF().toDF("k", "it")
       .groupBy(col("k")).agg(expr("graft_cms_sketch(it, 2, 8)").as("m"))
@@ -803,7 +802,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("Bloom sketch as streaming aggregation state ≡ the batch bit set (OR merge)") {
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftExpressions.register(spark)
     val input = MemoryStream[(String, String)]
     val agg = input.toDF().toDF("k", "it")
       .groupBy(col("k")).agg(expr("graft_bloom_sketch(it, 2, 64)").as("bits"))
@@ -836,7 +834,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("MG sketch as streaming state keeps the superset guarantee across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftExpressions.register(spark)
     val input = MemoryStream[String]
     val agg = input.toDF().toDF("it")
       .agg(count(lit(1)).as("n"), expr("graft_mg_sketch(it, 2)").as("cand"))
@@ -862,7 +859,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("bottom-k winner set as streaming state ≡ the batch bottom-k (p14 KMV)") {
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftExpressions.register(spark)
     val input = MemoryStream[(String, Long, Double)]
     val agg = input.toDF().toDF("k", "id", "u")
       .withColumn("_negu", -col("u"))

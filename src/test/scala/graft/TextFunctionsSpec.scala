@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.{GraftExpressions, TextFunctions}
+import graft.functions.TextFunctions
 
 /** Text function unit + property tests (SURVEY §5.2): token counts,
   * shingles, jaccard bounds, rolling-hash determinism. */
@@ -18,7 +18,6 @@ class TextFunctionsSpec extends SparkTestBase {
   }
 
   test("pseudonymize: consistent surrogates, type dispatch, codegen ≡ interpreted") {
-    graft.functions.GraftExpressions.register(spark)
     val s = TextFunctions.pseudonymizeString(
       "mail a@b.com then a@b.com call 555-0123 end")
     // the SAME entity maps to the SAME surrogate (consistency is the op)
@@ -45,7 +44,6 @@ class TextFunctionsSpec extends SparkTestBase {
   }
 
   test("graft_shingles equals the interpreted HOF chain (edges + non-ASCII + generated)") {
-    graft.functions.GraftExpressions.register(spark)
     // the codegen'd one-pass expression must be BIT-identical to the
     // four-level interpreted chain it replaced (r17) — including the
     // multi-space tokenization, the short-doc empty array, duplicate
@@ -55,9 +53,13 @@ class TextFunctionsSpec extends SparkTestBase {
     val gen = (1 to 200).map(_ =>
       (1 to rnd.nextInt(12)).map(_ => vocab(rnd.nextInt(vocab.size)))
         .mkString(if (rnd.nextBoolean()) " " else "  "))
+    // 13–32 tokens: long enough that n = 13 still yields shingles
+    val long = (1 to 50).map(_ =>
+      (1 to 13 + rnd.nextInt(20)).map(_ => vocab(rnd.nextInt(vocab.size)))
+        .mkString(if (rnd.nextBoolean()) " " else "  "))
     val edge = Seq("", " ", "  ", "one", "one two", "a a a a", "é z 日本 a b")
-    for (n <- Seq(2, 3)) {
-      val df = (gen ++ edge).toDF("text")
+    for (n <- Seq(2, 3, 5, 13)) {
+      val df = (gen ++ long ++ edge).toDF("text")
         .withColumn("oldsh",
           array_sort(TextFunctions.shingles(TextFunctions.tokens(col("text")), n)))
         .withColumn("newsh", expr(s"graft_shingles(text, $n)"))
@@ -67,11 +69,11 @@ class TextFunctionsSpec extends SparkTestBase {
       val bad = df.filter(not(col("oldsh") <=> col("newsh")) ||
         not(col("oldng") <=> col("newng"))).collect()
       assert(bad.isEmpty, bad.mkString("\n"))
+      assert(df.filter(size(col("newsh")) > 0).count() > 0, s"n=$n: no shingles to compare")
     }
   }
 
   test("graft_bigram_pairs equals the interpreted HOF struct chain (edges + non-ASCII + generated)") {
-    graft.functions.GraftExpressions.register(spark)
     // the codegen'd one-pass expression must be BIT-identical to the
     // interpreted transform/sequence/struct chain it replaced (r18 —
     // the graft_shingles discipline): multi-space tokenization, the
@@ -120,7 +122,6 @@ class TextFunctionsSpec extends SparkTestBase {
     assert(registeredDomain("https://localhost/") === null)
     assert(registeredDomain("") === null)
     // codegen path equals the driver-side function
-    graft.functions.GraftExpressions.register(spark)
     val viaExpr = Seq("https://a.b.example.co.uk/p", "https://github.io/")
       .toDF("u").selectExpr("graft_registered_domain(u)").as[String].collect()
     assert(viaExpr.toSeq === Seq("example.co.uk", null))
@@ -146,7 +147,6 @@ class TextFunctionsSpec extends SparkTestBase {
   }
 
   test("rolling hash: matches reference implementation on generated strings") {
-    GraftExpressions.register(spark)
     def refHash(s: String): Long =
       s.getBytes("UTF-8").foldLeft(0L)((h, b) => h * 31L + (b & 0xffL))
     val gen = Gen.listOfN(40, Gen.asciiPrintableStr)
@@ -158,7 +158,6 @@ class TextFunctionsSpec extends SparkTestBase {
   }
 
   test("mode count: known modes, ties, empty array, null elements") {
-    GraftExpressions.register(spark)
     val df = Seq(
       Seq("a", "b", "a", "c", "a"),          // mode a ×3
       Seq("x", "y"),                          // tie → 1
@@ -175,7 +174,6 @@ class TextFunctionsSpec extends SparkTestBase {
   }
 
   test("mode count agrees with the HOF equivalent on generated token arrays") {
-    GraftExpressions.register(spark)
     val gen = Gen.listOfN(60, Gen.oneOf("a", "b", "c", "d", "e"))
     val samples = (0 until 30).map(i =>
       gen(Gen.Parameters.default, Seed(i.toLong)).get.mkString(" "))
