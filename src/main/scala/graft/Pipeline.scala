@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.gen.BronzeGenerator
 import graft.gold.StarSchema
+import graft.io.CountedWrite
 import graft.silver.SilverTransform
 
 /** End-to-end layered pipeline runner — replaces the reference's Airflow
@@ -20,13 +21,26 @@ import graft.silver.SilverTransform
   * compatibility.
   *
   * Scale notes: silver is written partitioned by load_date so daily
-  * reruns replace one partition; the 7 gold outputs reuse one cached
-  * silver scan instead of re-reading 7× like the reference
-  * (`starschema.py:75-146`).
+  * reruns replace one partition; each of the 7 gold outputs re-reads
+  * silver uncached with its own pruned column subset, like the reference
+  * (`starschema.py:75-146`) — the gold stage below records the A/B that
+  * chose this over one cached scan. Every row count is taken by the
+  * write that produces it ([[graft.io.CountedWrite]]), never by reading
+  * an output back.
   */
 object Pipeline {
 
-  final case class StageResult(stage: String, rows: Long, path: String)
+  /** One stage's output. `seconds` is the stage's wall time, retries
+    * included; for `gold/<table>` it is that table's write + vacuum (the
+    * tables run concurrently, so these overlap), and for `quarantine` its
+    * write alone, which is also inside the silver stage's time. */
+  final case class StageResult(stage: String, rows: Long, path: String, seconds: Double)
+
+  private def timed[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val out = body
+    (out, (System.nanoTime() - t0) / 1e9)
+  }
 
   /** Per-stage retry policy (the reference's Airflow tasks run with
     * `retries=1..2, retry_delay=…`, `orchestration.py:124-147`).
@@ -107,24 +121,18 @@ object Pipeline {
     val bronzeDir = s"$rootDir/bronze/shipments/$loadDate"
     val silverDir = s"$rootDir/silver/shipments"
     val goldDir = s"$rootDir/gold/$loadDate"
+    val quarantineDir = s"$rootDir/quarantine/silver/$loadDate"
 
     // gen → bronze JSON (the reference's raw layer is JSON-per-day,
-    // extraction.py:114-136)
-    val bronzeRows = retryStage("bronze", retry, hooks) {
+    // extraction.py:114-136). Spark's JSON writer emits one line per row,
+    // so the rows written are the layer's line count.
+    val (bronzeRows, bronzeSeconds) = timed(retryStage("bronze", retry, hooks) {
       val bronzeOut = bronzeSource.getOrElse(
         BronzeGenerator.shipments(spark, nShipments, seed, loadDate))
-      bronzeOut.write.mode(SaveMode.Overwrite).json(bronzeDir)
-      // generator row count is nShipments by construction; a provided
-      // source is counted from the written layer as LINES (Spark's JSON
-      // writer emits one record per line) — a schema'd JSON count would
-      // re-PARSE the whole layer, the slowest scan in the pipeline,
-      // just to report a number (measured: a third full JSON pass at
-      // the 100× decade)
-      bronzeSource.fold(nShipments)(_ =>
-        spark.read.text(bronzeDir).count())
-    }
+      CountedWrite(bronzeOut)(_.write.mode(SaveMode.Overwrite).json(bronzeDir))
+    })
 
-    val (silverRows, quarantinedRows) = retryStage("silver", retry, hooks) {
+    val ((silverRows, quarantined), silverSeconds) = timed(retryStage("silver", retry, hooks) {
       // precheck (orchestration.py:51-83) then bronze JSON → silver
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(bronzeDir), spark.sparkContext.hadoopConfiguration)
@@ -138,30 +146,30 @@ object Pipeline {
       // row-level quarantine replaces the reference's try/except-per-file
       // (a bad record there silently drops the whole day): bad rows land
       // inspectable under quarantine/, good rows proceed
-      // with quarantine on, the transform output feeds three consumers
-      // (bad count, bad write, clean write) — persist it once so the
-      // transform runs a single time and the rule filters scan the cache
-      // the finally covers every consumer of the cache (bad count, bad
-      // write, clean write): a failure in any of them — each retryable —
-      // must not leak a persisted copy per attempt
+      // with quarantine on, the transform output feeds two consumers
+      // (bad write, clean write) — persist it once so the transform runs
+      // a single time and the rule filters scan the cache; the finally
+      // covers both: a failure in either — each retryable — must not
+      // leak a persisted copy per attempt
       val cached = if (quarantine) Some(transformed.persist()) else None
       try {
-        val (silver, quarantined) = if (!quarantine) (transformed, 0L) else {
+        val (silver, quarantined) = if (!quarantine) (transformed, None) else {
           val split = graft.silver.DataQuality.check(transformed, graft.silver.DataQuality.silverRules)
           val bad = split.quarantine.withColumn("violations",
             org.apache.spark.sql.functions.concat_ws(",",
               org.apache.spark.sql.functions.col("violations")))
-          val nBad = bad.count()
           // overwrite even when empty: a rerun of a date that previously had
           // bad rows must not leave the stale quarantine dir on disk
           // contradicting the rows=0 stage result
-          bad.write.mode(SaveMode.Overwrite).parquet(s"$rootDir/quarantine/silver/$loadDate")
-          (split.clean, nBad)
+          (split.clean, Some(timed(
+            CountedWrite(bad)(_.write.mode(SaveMode.Overwrite).parquet(quarantineDir)))))
         }
-        silver.write.mode(SaveMode.Overwrite).partitionBy("load_date").parquet(silverDir)
-        (spark.read.parquet(silverDir).where(s"load_date = '$loadDate'").count(), quarantined)
+        // every silver row carries this load_date, so the rows written
+        // are the partition's rows
+        (CountedWrite(silver)(
+          _.write.mode(SaveMode.Overwrite).partitionBy("load_date").parquet(silverDir)), quarantined)
       } finally cached.foreach(_.unpersist())
-    }
+    })
 
     // silver → gold: the silver scan fans out to 7 outputs UNCACHED —
     // each gold table re-reads the parquet with its OWN pruned column
@@ -197,7 +205,7 @@ object Pipeline {
       // submit them from a small thread pool (guide §2.6 overlap) so the
       // next table's tasks back-fill executors freed by the current
       // table's write/commit tail, instead of paying 7 sequential
-      // scan→write→count job latencies. Each write is a VersionedTable
+      // scan→write job latencies. Each write is a VersionedTable
       // snapshot+marker commit on its OWN root (no shared state across
       // tables), the data written per table is identical to the
       // sequential form, and result order is pinned by the table list,
@@ -213,11 +221,14 @@ object Pipeline {
         val futures = goldTables.map { case (name, df) =>
           scala.concurrent.Future {
             val tableRoot = s"$goldDir/$name"
-            graft.io.VersionedTable.write(spark, tableRoot, df)
-            graft.io.VersionedTable.vacuum(spark, tableRoot, keep = 2)
+            val (rows, seconds) = timed {
+              val rows = CountedWrite(df)(graft.io.VersionedTable.write(spark, tableRoot, _))
+              graft.io.VersionedTable.vacuum(spark, tableRoot, keep = 2)
+              rows
+            }
             if (exportCsv)
               df.write.mode(SaveMode.Overwrite).option("header", "true").csv(s"$goldDir/csv/$name")
-            StageResult(s"gold/$name", readGold(spark, rootDir, loadDate, name).count(), tableRoot)
+            StageResult(s"gold/$name", rows, tableRoot, seconds)
           }
         }
         val out = scala.concurrent.Await.result(
@@ -243,11 +254,9 @@ object Pipeline {
     }
 
     val results = Seq(
-      StageResult("bronze", bronzeRows, bronzeDir),
-      StageResult("silver", silverRows, silverDir)) ++
-      (if (quarantine)
-        Seq(StageResult("quarantine", quarantinedRows, s"$rootDir/quarantine/silver/$loadDate"))
-      else Seq.empty) ++
+      StageResult("bronze", bronzeRows, bronzeDir, bronzeSeconds),
+      StageResult("silver", silverRows, silverDir, silverSeconds)) ++
+      quarantined.map { case (rows, seconds) => StageResult("quarantine", rows, quarantineDir, seconds) } ++
       goldResults
     hooks.onSuccess(results)
     results

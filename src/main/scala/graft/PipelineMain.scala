@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   *     [--export-csv] [--quarantine] [--retries N]
   * }}}
   *
-  * Exit code 0 with per-stage rows on stdout on success; non-zero after
-  * retries are exhausted (the retry/backoff semantics live in
+  * Exit code 0 with per-stage rows and seconds on stdout on success;
+  * non-zero after retries are exhausted (the retry/backoff semantics live in
   * [[Pipeline.retryStage]]). Under `spark-submit` the cluster's master is
   * respected; standalone it falls back to `local[SPARK_GRAFT_CPUS]`.
   */
@@ -80,7 +80,8 @@ object PipelineMain {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val results = run(spark, a)
-      results.foreach(r => println(s"[pipeline] ${r.stage}: ${r.rows} rows -> ${r.path}"))
+      results.foreach(r =>
+        println(f"[pipeline] ${r.stage}: ${r.rows} rows in ${r.seconds}%.2f s -> ${r.path}"))
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[pipeline] FAILED: ${e.getMessage}")

@@ -53,9 +53,8 @@ object Merge {
     recoverCrashedSwap(fs, targetDir)
     val target = spark.read.parquet(targetDir)
     val plan = mergePlan(target, updates, key)
-    swapInto(spark, targetDir, plan.merged, suffix = "_merging")
+    val after = CountedWrite(plan.merged)(swapInto(spark, targetDir, _, suffix = "_merging"))
     plan.cached.unpersist()
-    val after = spark.read.parquet(targetDir).count()
     (plan.before, after, plan.matchedKeys, plan.updateKeys - plan.matchedKeys)
   }
 

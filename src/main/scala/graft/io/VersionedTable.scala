@@ -111,9 +111,8 @@ object VersionedTable {
       updates: DataFrame, key: String): (Long, Long, Long, Long) = {
     val target = read(spark, root)
     val plan = Merge.mergePlan(target, updates, key)
-    write(spark, root, plan.merged)
+    val after = CountedWrite(plan.merged)(write(spark, root, _))
     plan.cached.unpersist()
-    val after = read(spark, root).count()
     (plan.before, after, plan.matchedKeys, plan.updateKeys - plan.matchedKeys)
   }
 

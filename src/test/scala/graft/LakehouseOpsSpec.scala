@@ -184,6 +184,87 @@ class LakehouseOpsSpec extends SparkTestBase {
     assert(notified.forall(_.rows > 0))
   }
 
+  /** Every stage's reported rows against its output read back from disk. */
+  private def assertCountsOnDisk(root: String, date: String,
+      results: Seq[graft.Pipeline.StageResult]): Unit = {
+    val onDisk = results.map { r =>
+      r.stage -> (r.stage match {
+        case "bronze" => spark.read.text(r.path).count()
+        case "silver" => spark.read.parquet(r.path).where(s"load_date = '$date'").count()
+        case "quarantine" => spark.read.parquet(r.path).count()
+        case gold => graft.Pipeline.readGold(spark, root, date, gold.stripPrefix("gold/")).count()
+      })
+    }
+    assert(results.count(_.stage.startsWith("gold/")) === 7)
+    assert(results.map(r => r.stage -> r.rows) === onDisk)
+    assert(results.forall(_.seconds > 0.0), results)
+  }
+
+  test("stage counts taken from the writes equal the data on disk") {
+    val date = "2024-01-01"
+    val tmp = java.nio.file.Files.createTempDirectory("graft_counts_").toString
+    val fresh = graft.Pipeline.run(spark, tmp, date, nShipments = 300L)
+    assert(fresh.find(_.stage == "bronze").get.rows === 300L)
+    assertCountsOnDisk(tmp, date, fresh)
+    // same-date rerun: overwrite semantics, not an accumulation
+    assertCountsOnDisk(tmp, date, graft.Pipeline.run(spark, tmp, date, nShipments = 300L))
+
+    val quar = java.nio.file.Files.createTempDirectory("graft_counts_q_").toString
+    assertCountsOnDisk(quar, date,
+      graft.Pipeline.run(spark, quar, date, nShipments = 200L, quarantine = true))
+
+    // provided bronze with planted rule violations: a non-empty quarantine
+    val src = java.nio.file.Files.createTempDirectory("graft_counts_src_").toString
+    val bronze = graft.gen.BronzeGenerator.shipments(spark, 250L, 11L, date)
+      .withColumn("shipment_weight_kg",
+        when(col("tracking_number").endsWith("7"), lit(-1.0)).otherwise(col("shipment_weight_kg")))
+    val fromSource = graft.Pipeline.run(spark, src, date, quarantine = true,
+      bronzeSource = Some(bronze))
+    assert(fromSource.find(_.stage == "quarantine").get.rows > 0L)
+    assertCountsOnDisk(src, date, fromSource)
+  }
+
+  /** Long call site of every Spark job `body` starts on `spark`, in job
+    * order (gold-pool threads inherit the job group). */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "graft_jobs_" + java.util.UUID.randomUUID()
+    val sites = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case g if g == group => sites.put(e.jobId, e.stageInfos.map(_.details).mkString("\n"))
+          case g if g == s"$group-drain" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the drain job's start
+      // arrives, every job start before it has been seen
+      sc.setJobGroup(s"$group-drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    sites.values.asScala.toSeq
+  }
+
+  test("a generator-path pipeline run takes its counts from its writes: at most 17 jobs") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_jobs_").toString
+    val sites = jobCallSites(graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 200L))
+    val listing = sites.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n")
+    assert(sites.size <= 17, s"${sites.size} jobs:\n$listing")
+    assert(!sites.exists(_.contains("graft.io.VersionedTable$.read(")),
+      s"a gold table was read back:\n$listing")
+    // the one parquet schema inference left is the gold stage's silver scan
+    assert(sites.count(_.contains("DataFrameReader.parquet(")) === 1, listing)
+  }
+
   test("PipelineMain: arg parsing and end-to-end run on an existing session") {
     val a = PipelineMain.parse(Array("/data/lh", "2024-01-01",
       "--shipments", "250", "--quarantine", "--retries", "2"))
